@@ -27,7 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from databricks_etl_pipelines_spark.session import invocation_pin
+from databricks_etl_pipelines_spark.session import (
+    invocation_pin,
+    run_concurrently,
+)
 
 from databricks_etl_pipelines_spark.functions.textfns import (
     LANG_STOPWORDS,
@@ -263,10 +266,13 @@ def curate_corpus(
 
     The gate counts (input/quality/language) come from ONE aggregated pass
     over the scored frame — three nested predicates summed in a single
-    scan, instead of one count() action per stage. ``exact_unique`` is
-    persisted because three downstream consumers share it (its own count,
-    near-dup pair generation, and the final anti-join); it stays cached so
-    actions on the returned corpus don't re-run the dedup shuffle.
+    scan, instead of one count() action per stage. ``exact_unique`` goes
+    through :func:`invocation_pin` because three consumers share it (its
+    own count, near-dup pair generation and the final anti-join). Under
+    the default ``localCheckpoint`` strategy it is computed once, inside
+    the first action, and the returned corpus reads those blocks; nothing
+    enters the session's cache, and ``pinStrategy=none`` recomputes it per
+    consumer.
     """
     scored = docs.withColumn("__q", quality_score(text_col)).withColumn(
         "__lang", lang_id(text_col)
@@ -306,13 +312,9 @@ def curate_corpus(
     # freed by the first job's straggler tail. The values are the same
     # scalars as before; n_clean stays sequential (it consumes the
     # pinned exact_unique).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_gates = pool.submit(gate_agg.first)
-        f_exact = pool.submit(exact_unique.count)
-        gate_counts = f_gates.result()
-        n_exact = f_exact.result()
+    gate_counts, n_exact = run_concurrently(
+        docs.sparkSession, gate_agg.first, exact_unique.count
+    )
     total, n_quality, n_lang, n_rep = (
         gate_counts["total"] or 0,
         gate_counts["n_quality"] or 0,
@@ -687,13 +689,9 @@ def prepare_pretraining_corpus(
     # Overlap the independent gate-count scan with the dedup cache
     # materialization (r16, guide §2.6): same scalars, same semantics,
     # the second job back-fills the first one's tail.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_gates = pool.submit(gate_agg.first)
-        f_exact = pool.submit(unique.count)
-        row = f_gates.result()
-        n_exact = f_exact.result()
+    row, n_exact = run_concurrently(
+        docs.sparkSession, gate_agg.first, unique.count
+    )
     total, n_gate = row["t"] or 0, row["g"] or 0
     spans = duplicated_span_report(unique, text_col, id_col, n=span_n)
     keep_ids = spans.where(

@@ -41,6 +41,7 @@ from databricks_etl_pipelines_spark.sources.generator import (
     MCC_CATEGORIES,
     MCC_CODES,
 )
+from databricks_etl_pipelines_spark.session import run_concurrently
 from databricks_etl_pipelines_spark.sources.managed_table import ManagedTable
 
 AMOUNT_BUCKETS = ([10.0, 50.0, 200.0], ["micro", "small", "medium", "large"])
@@ -309,22 +310,39 @@ class MedallionPipeline:
         return self.bronze.append(feed)
 
     def run_silver(self) -> dict[str, int]:
+        """MERGE the bronze table into silver and append its quarantined
+        rows, as two concurrent commits. Returns the silver table's rows
+        and the rows quarantined by this run, from the manifest."""
         bronze = self.bronze.read(self.spark)
         silver, quarantined = silver_transform(bronze)
-        self.silver.merge_upsert(self.spark, silver, ["transaction_id"])
-        self.quarantine.append(quarantined)
+        run_concurrently(
+            self.spark,
+            lambda: self.silver.merge_upsert(
+                self.spark, silver, ["transaction_id"]
+            ),
+            lambda: self.quarantine.append(quarantined),
+        )
         return {
-            "silver": self.silver.read(self.spark).count(),
-            "quarantined": quarantined.count(),
+            "silver": self.silver.latest_meta()["rows"],
+            "quarantined": self.quarantine.latest_meta()["rows_written"],
         }
 
     def run_gold(self) -> dict[str, int]:
+        """Overwrite the three gold tables from silver, concurrently.
+        Returns each table's rows, from the manifest."""
         silver = self.silver.read(self.spark)
-        self.gold_merchant.create_or_overwrite(gold_merchant_risk_summary(silver))
-        self.gold_features.create_or_overwrite(gold_cardholder_features(silver))
-        self.gold_hourly.create_or_overwrite(gold_hourly_volume(silver))
+        tables = {
+            "merchant": (self.gold_merchant, gold_merchant_risk_summary),
+            "features": (self.gold_features, gold_cardholder_features),
+            "hourly": (self.gold_hourly, gold_hourly_volume),
+        }
+        run_concurrently(
+            self.spark,
+            *[
+                lambda t=t, build=build: t.create_or_overwrite(build(silver))
+                for t, build in tables.values()
+            ],
+        )
         return {
-            "merchant": self.gold_merchant.read(self.spark).count(),
-            "features": self.gold_features.read(self.spark).count(),
-            "hourly": self.gold_hourly.read(self.spark).count(),
+            name: t.latest_meta()["rows"] for name, (t, _) in tables.items()
         }

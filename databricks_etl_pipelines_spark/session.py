@@ -100,12 +100,43 @@ def invocation_pin(df):
     on compute-once semantics (e.g. the packing planner's sampled range
     partitioning) call ``localCheckpoint`` directly instead and say why.
     """
-    try:
-        mode = df.sparkSession.conf.get(PIN_STRATEGY_CONF, "localCheckpoint")
-    except Exception:  # pragma: no cover - defensive: conf always readable
-        mode = "localCheckpoint"
+    mode = df.sparkSession.conf.get(PIN_STRATEGY_CONF, "localCheckpoint")
     if mode == "persist":
         return df.persist()
     if mode == "none":
         return df
-    return df.localCheckpoint(eager=False)
+    if mode == "localCheckpoint":
+        return df.localCheckpoint(eager=False)
+    raise ValueError(
+        f"unknown {PIN_STRATEGY_CONF}={mode!r}; expected one of "
+        "'localCheckpoint', 'persist', 'none'"
+    )
+
+
+def run_concurrently(spark: SparkSession, *fns):
+    """Run independent zero-argument callables at the same time and return
+    their results in argument order (the first failure re-raises after all
+    have finished).
+
+    Each callable runs on its own thread wrapped by
+    ``pyspark.inheritable_thread_target(spark)``, so the jobs it starts
+    carry the caller's local properties (job group, job tags, scheduler
+    pool, description) and the session's tags: cancelling the caller's
+    group or tag cancels them too. Use it for actions that share no
+    mutable state, e.g. commits to different ManagedTables, so the second
+    job's tasks fill the cores the first job's straggler tail leaves idle.
+    """
+    if len(fns) < 2:
+        return [fn() for fn in fns]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        # one wrapper per callable: each wrapper holds its own copy of the
+        # caller's properties, and the thread mutates it (SQL execution
+        # ids), so threads must not share one
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns
+        ]
+        return [f.result() for f in futures]

@@ -23,6 +23,17 @@ partition-pruned analog of Delta's file-level rewrite — and carries every
 untouched bucket into the new version by hardlink (byte-identical, no IO).
 An incremental upsert stream that touches k of N buckets costs O(k/N) of
 the table per commit instead of O(table).
+
+The manifest is the table's metadata, as Delta's log is. Each entry records
+the version's read schema (partition columns last, every field nullable),
+its ``partition_by`` layout, ``rows`` (and ``bucket_rows`` per bucket on a
+bucketed table) and ``rows_written`` by the commit. Counts come from the
+parquet footers of the files the commit wrote, read on the driver; carried
+files keep the counts the manifest already holds. So a read starts no
+schema-inference job, a writer learns what it wrote without a count-back
+job, and a plain append is O(batch): it writes only the new rows, in the
+table's layout, and hardlinks the prior version's files. Entries written
+before the manifest carried this metadata still read (by inference).
 """
 
 from __future__ import annotations
@@ -33,10 +44,13 @@ import os
 import shutil
 import time
 import warnings
-from collections.abc import Sequence
+from collections import Counter
+from collections.abc import Collection, Iterable, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 try:  # pragma: no cover - depends on environment
     from delta.tables import DeltaTable  # type: ignore
@@ -77,12 +91,14 @@ def _normalize_nullability(dt):
     comparison ignores nullability: parquet read-back marks everything
     nullable, so a freshly-built frame with non-nullable struct fields
     would otherwise spuriously mismatch its own committed schema."""
-    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+    from pyspark.sql.types import ArrayType, MapType, StructField
 
     if isinstance(dt, StructType):
         return StructType(
             [
-                StructField(f.name, _normalize_nullability(f.dataType), True)
+                StructField(
+                    f.name, _normalize_nullability(f.dataType), True, f.metadata
+                )
                 for f in dt.fields
             ]
         )
@@ -179,19 +195,75 @@ def _zorder_value(
     return z
 
 
-def _link_tree(src_dir: str, dst_dir: str) -> None:
-    """Hardlink every file under src_dir into dst_dir (copy on link failure).
-    Used to carry untouched buckets across versions byte-identically."""
-    for dirpath, _dirnames, filenames in os.walk(src_dir):
+def _read_schema(schema: StructType, partition_by: Sequence[str]) -> StructType:
+    """The schema a parquet read of a version yields: data columns in
+    write order, partition columns last, every field nullable."""
+    parts = set(partition_by)
+    return _normalize_nullability(
+        StructType(
+            [f for f in schema.fields if f.name not in parts]
+            + [schema[c] for c in partition_by]
+        )
+    )
+
+
+def _part_files(root: str) -> list[str]:
+    """Every data file under ``root``, partition dirs included."""
+    return [
+        os.path.join(d, n)
+        for d, _, names in os.walk(root)
+        for n in names
+        if n.startswith("part-")
+    ]
+
+
+def _bucket_key(path: str) -> str:
+    """Id of the ``__bucket=`` dir a file lies in ("" outside one)."""
+    d = os.path.basename(os.path.dirname(path))
+    return d.split("=", 1)[1] if d.startswith(BUCKET_COL + "=") else ""
+
+
+def _footer_rows(files: Iterable[str]) -> Counter:
+    """Rows of ``files`` from their parquet footers, read by pyarrow on the
+    driver (no Spark job), keyed by :func:`_bucket_key`."""
+    rows: Counter = Counter()
+    for f in files:
+        rows[_bucket_key(f)] += pq.read_metadata(f).num_rows
+    return rows
+
+
+def _touched_buckets(df: DataFrame) -> list[int]:
+    """Bucket ids present in ``df``: at most n_buckets small ints via one
+    distinct — bounded driver traffic regardless of table or source size."""
+    return sorted(r[0] for r in df.select(BUCKET_COL).distinct().collect())
+
+
+def _link_tree(
+    src_dir: str, dst_dir: str, skip: Collection[str] = ()
+) -> list[str]:
+    """Hardlink every file under src_dir into dst_dir (copy on link failure),
+    leaving out the top-level dirs named in ``skip`` and files the
+    destination already has (its own ``_SUCCESS`` marker). Used to carry
+    untouched buckets, or a whole prior version, across versions
+    byte-identically. Returns the linked data files."""
+    linked = []
+    for dirpath, dirnames, filenames in os.walk(src_dir):
         rel = os.path.relpath(dirpath, src_dir)
+        if rel == ".":
+            dirnames[:] = [d for d in dirnames if d not in skip]
         out = os.path.join(dst_dir, rel) if rel != "." else dst_dir
         os.makedirs(out, exist_ok=True)
         for fn in filenames:
             s, d = os.path.join(dirpath, fn), os.path.join(out, fn)
+            if os.path.exists(d):
+                continue
             try:
                 os.link(s, d)
             except OSError:  # pragma: no cover - cross-device fallback
                 shutil.copy2(s, d)
+            if fn.startswith("part-"):
+                linked.append(d)
+    return linked
 
 
 class ManagedTable:
@@ -212,7 +284,8 @@ class ManagedTable:
         return log[-1]["version"]
 
     def latest_meta(self, having: str | None = None) -> dict | None:
-        """Latest commit's manifest entry (version/operation/timestamp plus
+        """Latest commit's manifest entry (version/operation/timestamp,
+        schema, layout and row counts — see the module docstring — plus
         any operation metadata) as a plain dict, or ``None`` for a table
         with no commits — the driver-side hook replay-aware writers use to
         read fold markers without a Spark scan. The entry and its metadata
@@ -247,12 +320,22 @@ class ManagedTable:
     def _read_internal(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        v = self.latest_version() if version is None else version
+        """The version's files as written (bucket column included). The
+        manifest's schema makes the read job-free; an entry without one
+        infers it from a parquet footer (a one-task Spark job)."""
+        log = _read_log(self.root)
+        if not log:
+            raise FileNotFoundError(f"no versions at {self.root}")
+        v = log[-1]["version"] if version is None else version
         if not os.path.isdir(self._version_dir(v)):
             raise FileNotFoundError(
                 f"version {v} of {self.root} is not on disk (vacuumed?)"
             )
-        return spark.read.parquet(self._version_dir(v))
+        entry = next((e for e in log if e["version"] == v), {})
+        reader = spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        return reader.parquet(self._version_dir(v))
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Read the table; ``version`` = time travel (VERSION AS OF)."""
@@ -273,16 +356,11 @@ class ManagedTable:
         spec = self.bucket_spec()
         if spec and list(spec[0]) == keys:
             bkeys, nb = spec
-            bucket_ids = sorted(
-                r[0]
-                for r in want.select(
-                    _bucket_expr(bkeys, nb).alias(BUCKET_COL)
-                )
-                .distinct()
-                .collect()
+            bucket_ids = _touched_buckets(
+                want.select(_bucket_expr(bkeys, nb).alias(BUCKET_COL))
             )
             base = (
-                self._read_internal(spark, self.latest_version())
+                self._read_internal(spark)
                 .filter(F.col(BUCKET_COL).isin(bucket_ids))
                 .drop(BUCKET_COL)
             )
@@ -291,7 +369,9 @@ class ManagedTable:
         return base.join(want, keys, "left_semi")
 
     def history(self, spark: SparkSession) -> DataFrame:
-        """DESCRIBE HISTORY equivalent: one row per committed version."""
+        """DESCRIBE HISTORY equivalent: one row per committed version;
+        ``rows`` is the version's row count from the manifest (-1 for an
+        entry written before the manifest recorded counts)."""
         return spark.createDataFrame(
             [
                 (e["version"], e["operation"], e["timestamp"], e.get("rows", -1))
@@ -354,19 +434,90 @@ class ManagedTable:
         operation: str,
         partition_by: Sequence[str] | None = None,
         meta: dict | None = None,
+        rewritten: Collection[int] | None = None,
     ) -> int:
+        """Write ``df`` as the next version and append its manifest entry
+        (see the module docstring) in one atomic ``_write_log``.
+
+        ``rewritten`` = None writes a fresh snapshot. Otherwise the prior
+        version's files are hardlinked into the new one, except the
+        bucket dirs whose ids ``rewritten`` lists: ``()`` is a plain
+        append, a bucket list a pruned bucket commit. ``df`` is then
+        written in the prior version's column order, so every file of a
+        version shares one schema."""
         log = _read_log(self.root)
-        v = (log[-1]["version"] + 1) if log else 0
+        prev = log[-1] if log else None
+        v = prev["version"] + 1 if prev else 0
         path = self._version_dir(v)
+        part = list(partition_by or [])
+        if rewritten is not None and "schema" in prev:
+            df = df.select(*StructType.fromJson(prev["schema"]).fieldNames())
         writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        if part:
+            writer = writer.partitionBy(*part)
         writer.parquet(path)
-        entry = {"version": v, "operation": operation, "timestamp": time.time()}
+        written = _footer_rows(_part_files(path))
+        rows: Counter = Counter()
+        if rewritten is not None:
+            linked = _link_tree(
+                self._version_dir(prev["version"]),
+                path,
+                skip={f"{BUCKET_COL}={b}" for b in rewritten},
+            )
+            known = (
+                prev.get("bucket_rows")
+                if part == [BUCKET_COL]
+                else {"": prev["rows"]} if "rows" in prev else None
+            )
+            # carried files keep the counts the prior entry holds; an
+            # entry without them pays a footer read of the linked files
+            keys = {_bucket_key(f) for f in linked}
+            if known is not None and keys <= known.keys():
+                rows.update({k: known[k] for k in keys})
+            else:
+                rows.update(_footer_rows(linked))
+        rows.update(written)
+        entry = {
+            "version": v,
+            "operation": operation,
+            "timestamp": time.time(),
+            "rows": sum(rows.values()),
+            "rows_written": sum(written.values()),
+            "partition_by": part,
+            "schema": _read_schema(df.schema, part).jsonValue(),
+        }
+        if part == [BUCKET_COL]:
+            entry["bucket_rows"] = {k: rows[k] for k in sorted(rows, key=int)}
+            if rewritten is not None:
+                entry["buckets_rewritten"] = len(rewritten)
         entry.update(meta or {})
         log.append(entry)
         _write_log(self.root, log)
         return v
+
+    def _commit_buckets(
+        self,
+        df: DataFrame,
+        operation: str,
+        keys: list[str],
+        n_buckets: int,
+        touched: list[int],
+    ) -> int:
+        """Pruned bucket commit: ``df`` holds the new contents of the
+        ``touched`` buckets; every other bucket hardlinks into the new
+        version (byte-identical carry-over, no data IO). The shuffle is
+        aligned with the layout — each bucket dir is written by one task,
+        ~1 file per bucket instead of shuffle.partitions files — and runs
+        no more tasks than the cluster has cores: a task writes several
+        buckets rather than queueing behind the others' start-up."""
+        width = df.sparkSession.sparkContext.defaultParallelism
+        return self._commit(
+            df.repartition(max(min(len(touched), width), 1), BUCKET_COL),
+            operation,
+            [BUCKET_COL],
+            {"bucket_keys": keys, "n_buckets": n_buckets},
+            rewritten=touched,
+        )
 
     def create_or_overwrite(
         self,
@@ -459,25 +610,32 @@ class ManagedTable:
         partition_by: Sequence[str] | None = None,
         merge_schema: bool = False,
     ) -> int:
-        """``merge_schema`` = Delta's ``mergeSchema``: the committed
+        """Append ``df``. On an unbucketed table this writes only the new
+        rows, in the table's ``partition_by`` layout, and hardlinks the
+        prior version's files: O(batch), not O(table). ``partition_by``
+        lays out a new table; on an existing one a different layout
+        rewrites the table in it.
+
+        ``merge_schema`` = Delta's ``mergeSchema``: the committed
         schema becomes the union of old and new columns, absent columns
         null-filled on either side. Without it, drifted schemas fail
-        fast. On a bucketed table a widening append pays ONE
-        layout-preserving full rewrite (schema changes are rare events;
-        every version dir stays single-schema so ordinary reads never
-        need parquet schema merging) — subsequent appends/merges are
-        pruned again."""
-        exists = self.exists()
-        spec = self.bucket_spec() if exists else None
-        prior = self.read(df.sparkSession) if exists else None
-        drifted = exists and set(prior.columns) != set(df.columns)
+        fast. A widening append pays ONE full rewrite (schema changes are
+        rare events; every version dir stays single-schema so ordinary
+        reads never need parquet schema merging); a bucketed table keeps
+        its layout through it, so subsequent appends/merges are pruned
+        again. A non-widening append to a bucketed table rewrites only
+        the buckets receiving rows (see ``_append_bucket_pruned``)."""
+        if not self.exists():
+            return self._commit(df, "append", partition_by)
+        spec = self.bucket_spec()
+        prior = self.read(df.sparkSession)
+        drifted = set(prior.columns) != set(df.columns)
         if drifted and not merge_schema:
             raise ValueError(
                 "append schema drift (use merge_schema=True): "
                 f"table={sorted(prior.columns)} incoming={sorted(df.columns)}"
             )
-        if exists:
-            _check_type_drift(prior, df, "append")
+        _check_type_drift(prior, df, "append")
         if spec:
             if drifted:
                 keys, nb = spec
@@ -496,9 +654,13 @@ class ManagedTable:
                     },
                 )
             return self._append_bucket_pruned(df, *spec)
-        if exists:
+        layout = self.latest_meta().get("partition_by")
+        if partition_by is None:
+            partition_by = layout
+        if drifted or layout is None or list(partition_by) != layout:
             df = prior.unionByName(df, allowMissingColumns=drifted)
-        return self._commit(df, "append", partition_by)
+            return self._commit(df, "append", partition_by)
+        return self._commit(df, "append", layout, rewritten=())
 
     def _append_bucket_pruned(
         self, df: DataFrame, keys: list[str], n_buckets: int
@@ -506,45 +668,15 @@ class ManagedTable:
         """Append on a bucketed table: rewrite only buckets receiving new
         rows (prior bucket contents unioned in), hardlink the rest — same
         O(touched/total) write amplification as the pruned MERGE."""
-        spark = df.sparkSession
         incoming = df.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        touched = sorted(
-            r[0] for r in incoming.select(BUCKET_COL).distinct().collect()
-        )
-        prev_v = self.latest_version()
-        prior_touched = self._read_internal(spark, prev_v).filter(
+        touched = _touched_buckets(incoming)
+        prior_touched = self._read_internal(df.sparkSession).filter(
             F.col(BUCKET_COL).isin(touched)
         )
         combined = prior_touched.unionByName(incoming)
-
-        log = _read_log(self.root)
-        v = log[-1]["version"] + 1
-        path = self._version_dir(v)
-        (
-            combined.repartition(max(len(touched), 1), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
+        return self._commit_buckets(
+            combined, "append", keys, n_buckets, touched
         )
-        touched_set = set(touched)
-        for bdir in glob.glob(
-            os.path.join(self._version_dir(prev_v), f"{BUCKET_COL}=*")
-        ):
-            b = int(os.path.basename(bdir).split("=", 1)[1])
-            if b not in touched_set:
-                _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
-        log.append(
-            {
-                "version": v,
-                "operation": "append",
-                "timestamp": time.time(),
-                "bucket_keys": keys,
-                "n_buckets": n_buckets,
-                "buckets_rewritten": len(touched),
-            }
-        )
-        _write_log(self.root, log)
-        return v
 
     def optimize(
         self,
@@ -670,9 +802,7 @@ class ManagedTable:
         spec = self.bucket_spec()
         if spec:
             keys, n_buckets = spec
-            remaining = self._read_internal(
-                spark, self.latest_version()
-            ).filter(keep)
+            remaining = self._read_internal(spark).filter(keep)
             return self._commit(
                 remaining.repartition(n_buckets, BUCKET_COL),
                 "delete",
@@ -714,43 +844,15 @@ class ManagedTable:
             return self._commit(remaining, "delete")
         keys, n_buckets = spec
         vic = victims.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        touched = sorted(
-            r[0] for r in vic.select(BUCKET_COL).distinct().collect()
+        touched = _touched_buckets(vic)
+        surviving = (
+            self._read_internal(spark)
+            .filter(F.col(BUCKET_COL).isin(touched))
+            .join(vic.select(*keys).distinct(), list(keys), "left_anti")
         )
-        prev_v = self.latest_version()
-        target = self._read_internal(spark, prev_v)
-        surviving = target.filter(F.col(BUCKET_COL).isin(touched)).join(
-            vic.select(*keys).distinct(), list(keys), "left_anti"
+        return self._commit_buckets(
+            surviving, "delete", list(keys), n_buckets, touched
         )
-
-        log = _read_log(self.root)
-        v = log[-1]["version"] + 1
-        path = self._version_dir(v)
-        (
-            surviving.repartition(max(len(touched), 1), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-        touched_set = set(touched)
-        for bdir in glob.glob(
-            os.path.join(self._version_dir(prev_v), f"{BUCKET_COL}=*")
-        ):
-            b = int(os.path.basename(bdir).split("=", 1)[1])
-            if b not in touched_set:
-                _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
-        log.append(
-            {
-                "version": v,
-                "operation": "delete",
-                "timestamp": time.time(),
-                "bucket_keys": list(keys),
-                "n_buckets": n_buckets,
-                "buckets_rewritten": len(touched),
-            }
-        )
-        _write_log(self.root, log)
-        return v
 
     def _merge_bucket_pruned(
         self,
@@ -760,52 +862,17 @@ class ManagedTable:
         n_buckets: int,
     ) -> int:
         src = source.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        # Touched-bucket set: at most n_buckets small ints via one distinct —
-        # bounded driver traffic regardless of table or source size.
-        touched = sorted(
-            r[0] for r in src.select(BUCKET_COL).distinct().collect()
+        touched = _touched_buckets(src)
+        target_touched = self._read_internal(spark).filter(
+            F.col(BUCKET_COL).isin(touched)
         )
-        prev_v = self.latest_version()
-        target = self._read_internal(spark, prev_v)
-        target_touched = target.filter(F.col(BUCKET_COL).isin(touched))
+        # an anti join needs no distinct keys: leaving the distinct out
+        # lets a small source broadcast without an aggregation shuffle
         untouched_src = target_touched.join(
-            src.select(*keys).distinct(), keys, "left_anti"
+            src.select(*keys), keys, "left_anti"
         )
         merged = src.unionByName(untouched_src)
-
-        log = _read_log(self.root)
-        v = log[-1]["version"] + 1
-        path = self._version_dir(v)
-        # Align the shuffle with the layout: partition by bucket before the
-        # partitioned write so each bucket dir is written by its own task(s)
-        # (~1 file per bucket instead of shuffle.partitions files per bucket).
-        (
-            merged.repartition(max(len(touched), 1), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-        # Carry untouched buckets over by hardlink: no data IO, and a pytest
-        # can assert byte-identity across versions.
-        touched_set = set(touched)
-        for bdir in glob.glob(
-            os.path.join(self._version_dir(prev_v), f"{BUCKET_COL}=*")
-        ):
-            b = int(os.path.basename(bdir).split("=", 1)[1])
-            if b not in touched_set:
-                _link_tree(bdir, os.path.join(path, os.path.basename(bdir)))
-        log.append(
-            {
-                "version": v,
-                "operation": "merge",
-                "timestamp": time.time(),
-                "bucket_keys": keys,
-                "n_buckets": n_buckets,
-                "buckets_rewritten": len(touched),
-            }
-        )
-        _write_log(self.root, log)
-        return v
+        return self._commit_buckets(merged, "merge", keys, n_buckets, touched)
 
 
 def _same_file_set(dir_a: str, dir_b: str) -> bool:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from databricks_etl_pipelines_spark.session import run_concurrently
 from databricks_etl_pipelines_spark.sources.managed_table import ManagedTable
 
 
@@ -759,8 +760,14 @@ class StreamingMedallion:
     hourly gold aggregate (incremental maintenance instead of the
     reference's batch overwrite, 03:62-64).
 
-    Checkpoint + keyed MERGE + additive-by-key gold keep every stage
-    replay-safe; per-batch cost tracks batch size + aggregate size, never
+    The micro-batch source is persisted, so it is read once; the three
+    commits share no table and run concurrently on threads that inherit
+    the stream's job group (``session.run_concurrently``). The quarantine
+    append writes only the batch's rows and hardlinks the rest.
+
+    Checkpoint + keyed MERGE + a batch-id-stamped gold fold keep silver
+    and gold replay-safe (a redelivered batch re-appends its quarantine
+    rows); per-batch cost tracks batch size + aggregate size, never
     table history.
 
     ``bucket_silver=N`` lays silver out as N key-hash buckets on
@@ -780,7 +787,19 @@ class StreamingMedallion:
         self.gold_hourly = ManagedTable(os.path.join(root, "gold_hourly"))
         self.bucket_silver = bucket_silver
 
-    def _fold_gold(self, silver_batch: DataFrame) -> None:
+    def _fold_gold(
+        self, silver_batch: DataFrame, batch_id: int, checkpoint_dir: str
+    ) -> None:
+        """Fold the batch into the hourly gold, once per batch id: the
+        commit stamps the batch id (see :func:`fold_partial_batch`), so a
+        batch redelivered after a failed sibling commit folds nothing."""
+        prior = self.gold_hourly.latest_meta(having="fold_checkpoint")
+        if (
+            prior is not None
+            and prior.get("fold_checkpoint") == checkpoint_dir
+            and batch_id <= prior.get("fold_batch_id", -1)
+        ):
+            return
         partial = silver_batch.groupBy(
             "event_date", "event_hour", "card_network", "mcc_category"
         ).agg(
@@ -798,7 +817,10 @@ class StreamingMedallion:
                     F.sum("total_volume").alias("total_volume"),
                 )
             )
-        self.gold_hourly.create_or_overwrite(partial)
+        self.gold_hourly.create_or_overwrite(
+            partial,
+            meta={"fold_checkpoint": checkpoint_dir, "fold_batch_id": batch_id},
+        )
 
     def start(
         self, stream: DataFrame, checkpoint_dir: str,
@@ -808,14 +830,7 @@ class StreamingMedallion:
             silver_transform,
         )
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            silver_batch, quarantined = silver_transform(batch_df)
-            # MERGE consumes silver_batch twice (source ∪ anti) and the
-            # gold fold a third time — cache the enriched batch
-            silver_batch = silver_batch.persist()
-            self.quarantine.append(quarantined)
+        def merge_silver(silver_batch: DataFrame) -> None:
             if self.bucket_silver and not self.silver.exists():
                 # first batch creates the bucket layout; every later MERGE
                 # dispatches onto the bucket-pruned path automatically
@@ -828,8 +843,26 @@ class StreamingMedallion:
                 self.silver.merge_upsert(
                     self.spark, silver_batch, ["transaction_id"]
                 )
-            self._fold_gold(silver_batch)
-            silver_batch.unpersist()
+
+        def process(batch_df: DataFrame, batch_id: int) -> None:
+            # Every consumer below derives from the micro-batch source, so
+            # pin the source: the emptiness probe fills the cache and the
+            # source is read once per batch.
+            source = batch_df.persist()
+            try:
+                if source.isEmpty():
+                    return
+                silver_batch, quarantined = silver_transform(source)
+                run_concurrently(
+                    source.sparkSession,
+                    lambda: self.quarantine.append(quarantined),
+                    lambda: merge_silver(silver_batch),
+                    lambda: self._fold_gold(
+                        silver_batch, batch_id, checkpoint_dir
+                    ),
+                )
+            finally:
+                source.unpersist()
 
         writer = (
             stream.writeStream.foreachBatch(process)

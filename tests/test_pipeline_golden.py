@@ -130,20 +130,27 @@ def test_optimize_compaction_and_clustering(spark, tmp_path):
 
     from databricks_etl_pipelines_spark.sources.managed_table import ManagedTable
 
+    import glob
+    import os
+
+    def part_files(v):
+        # OPTIMIZE changes the version's file count; read splits would
+        # pack small files by core count instead
+        return glob.glob(os.path.join(str(tmp_path / "t"), f"_v{v}", "part-*"))
+
     mt = ManagedTable(str(tmp_path / "t"))
     df = spark.range(0, 10000).select(
         F.col("id"),
         (F.col("id") % 7).alias("k"),
         (F.col("id") * 3 % 100).alias("v"),
     )
-    mt.create_or_overwrite(df.repartition(16))  # simulate many small files
-    before = mt.read(spark)
-    assert before.rdd.getNumPartitions() >= 16
+    v0 = mt.create_or_overwrite(df.repartition(16))  # many small files
+    assert len(part_files(v0)) >= 16
 
-    mt.optimize(spark, target_partitions=2)
+    v1 = mt.optimize(spark, target_partitions=2)
     compacted = mt.read(spark)
     assert compacted.count() == 10000
-    assert compacted.rdd.getNumPartitions() <= 2
+    assert len(part_files(v1)) <= 2
 
     v = mt.optimize(spark, cluster_by=["k", "v"], target_partitions=8)
     clustered = mt.read(spark)
@@ -156,10 +163,7 @@ def test_optimize_compaction_and_clustering(spark, tmp_path):
     # every file. Margins are loose because range-exchange boundary
     # sampling is seeded randomly per run (observed dk<=5, vspan<=49 over
     # trials; full domains are 7 and ~99).
-    import glob
-    import os
-
-    files = glob.glob(os.path.join(str(tmp_path / "t"), f"_v{v}", "part-*"))
+    files = part_files(v)
     assert len(files) >= 4
     dks, vspans = [], []
     for f in files:

@@ -452,6 +452,69 @@ def test_stream_stream_left_outer_emits_on_watermark_expiry(spark, tmp_path):
     assert (200, 2, None) in got       # unmatched left, emitted on expiry
 
 
+def test_streaming_medallion_reads_each_source_row_once(spark, tmp_path):
+    """The foreachBatch body persists the micro-batch source, so its
+    quarantine append, silver MERGE and gold fold read the staged rows
+    once between them: the drain's numInputRows equals the staged rows."""
+    from databricks_etl_pipelines_spark.plans.medallion import (
+        silver_transform,
+    )
+    from databricks_etl_pipelines_spark.sources.generator import (
+        batch_transactions,
+    )
+    from databricks_etl_pipelines_spark.streaming.structured import (
+        StreamingMedallion,
+        await_drained,
+    )
+
+    feed = batch_transactions(spark, 900)
+    src = str(tmp_path / "feed")
+    feed.repartition(3).write.mode("overwrite").parquet(src)
+    m = StreamingMedallion(spark, str(tmp_path / "tables"), bucket_silver=8)
+    stream = (
+        spark.readStream.schema(feed.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = m.start(stream, str(tmp_path / "ckpt"))
+    await_drained(q, 120)
+    progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(progress) == 3
+    assert sum(p["numInputRows"] for p in progress) == 900
+
+    silver, quarantined = silver_transform(feed)
+    assert m.silver.latest_meta()["rows"] == silver.count()
+    assert m.quarantine.latest_meta()["rows"] == quarantined.count()
+
+
+def test_streaming_medallion_gold_fold_skips_redelivered_batch(spark, tmp_path):
+    """The three per-batch commits run concurrently, so the gold fold can
+    succeed while a sibling commit fails; the redelivered batch must not
+    fold a second time."""
+    from databricks_etl_pipelines_spark.plans.medallion import (
+        silver_transform,
+    )
+    from databricks_etl_pipelines_spark.sources.generator import (
+        batch_transactions,
+    )
+    from databricks_etl_pipelines_spark.streaming.structured import (
+        StreamingMedallion,
+    )
+
+    silver, _ = silver_transform(batch_transactions(spark, 300))
+    m = StreamingMedallion(spark, str(tmp_path / "tables"))
+    ckpt = str(tmp_path / "ckpt")
+
+    def gold_rows():
+        return m.gold_hourly.read(spark).agg(F.sum("txn_count")).first()[0]
+
+    m._fold_gold(silver, 0, ckpt)
+    m._fold_gold(silver, 0, ckpt)  # redelivery of batch 0
+    assert gold_rows() == silver.count()
+    m._fold_gold(silver, 1, ckpt)
+    assert gold_rows() == 2 * silver.count()
+
+
 def test_streaming_medallion_bucketed_silver_write_amplification(
     spark, tmp_path
 ):
